@@ -55,11 +55,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm_col
 from .similarity import (
+    _coarse_window,
+    _cosine,
     _kmeans_fit,
     _topk_rescore,
     bounded_training_sample,
@@ -263,17 +265,10 @@ def pq_adc_topk(
                 F.col("query_id"), F.col("qv"), F.col("codes")
             ),
         )
-        .withColumn(
-            "_sim",
-            F.when(F.col("_qn") * F.col("dn") == 0.0, F.lit(0.0)).otherwise(
-                F.col("_adc") / (F.col("_qn") * F.col("dn"))
-            ),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), "neighbor_id")
-    cands = (
-        scored.withColumn("_crk", F.row_number().over(w))
-        .filter(F.col("_crk") <= int(k) * int(oversample))
-        .select("query_id", "neighbor_id")
+    cands = _coarse_window(
+        scored,
+        _cosine(F.col("_adc"), F.col("_qn"), F.col("dn")),
+        int(k) * int(oversample),
     )
     return _topk_rescore(cands, queries, embeddings, k)

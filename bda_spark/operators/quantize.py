@@ -21,7 +21,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from ..functions.vectors import dot_col, l2_norm_col
+from .similarity import (
+    _coarse_window,
+    _cosine,
+    _topk_rescore,
+    ivf_index,
+    probe_cells,
+)
 
 
 def sq8_bounds(embeddings: DataFrame, col: str = "embedding") -> tuple[list, list]:
@@ -104,106 +112,54 @@ def sq8_dequantize_col(
     )
 
 
-def _cos(a: Column, b: Column) -> Column:
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n1 = F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    n2 = F.sqrt(
-        F.aggregate(
-            F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    # zero-norm convention: similar to nothing, never NaN (which would
-    # sort above every real value and poison the top-k)
-    return F.when(n1 * n2 == 0.0, F.lit(0.0)).otherwise(dot / (n1 * n2))
+def _keyed(df: DataFrame, col: str, id_col: str) -> DataFrame:
+    """(vec_id, embedding) — the contract the shared IVF helpers and
+    the exact rerank read."""
+    return df.select(F.col(id_col).alias("vec_id"), F.col(col).alias("embedding"))
 
 
-def _coarse_then_rerank(
-    probes: DataFrame,
-    index: DataFrame,
-    qside: DataFrame,
-    exact: DataFrame,
+def _sq8_search(
+    coded: DataFrame,
+    queries: DataFrame,
+    embeddings: DataFrame,
     lo: list[float],
     hi: list[float],
     k: int,
     oversample: int,
+    probes: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared second half of the IVF+SQ8 pipelines (live and
-    persisted-artifact — one body so tie-breaks, the self-match
-    filter, and the rounding policy cannot diverge): coarse-rank
-    probed candidates on dequantized int8 codes, keep k x oversample
-    per query, exact-rerank against the float vectors."""
-    # dequantize + norms hoisted BEFORE the probe join: an index row
-    # is matched by every query probing its cell, so inline _cos would
-    # re-dequantize and re-aggregate its norm once per (query, row)
-    # pair; hoisted, each runs once per row and the pair-level work is
-    # one dot + one divide. Same expressions in the same order as
-    # _cos — bit-identical sims, pinned by the full-probe ≡ brute
-    # force pytest and the r6 oracle hashes.
+    """The body of every SQ8 search: each query's ``k * oversample``
+    best rows of ``coded`` (neighbor_id, codes[, centroid_id]) by
+    cosine against the DEQUANTIZED int8 codes, exact-reranked on the
+    float ``embeddings`` by the shared ``similarity._topk_rescore``.
+    With ``probes`` (query_id, centroid_id) only the rows in a query's
+    probed IVF cells are scored; without, every row is.
+
+    Dequantization and norms are hoisted BEFORE the pair join: a code
+    row is matched by every query that reaches it, so inline they
+    would re-run once per (query, row) pair; hoisted, each runs once
+    per row and the pair-level work is one dot + one divide."""
     deq = sq8_dequantize_col("codes", lo, hi)
-    norm = lambda a: F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
+    idx = coded.withColumn("_dv", deq).withColumn("_dn", l2_norm_col("_dv"))
+    v = F.col("embedding").cast("array<double>")
+    q = F.broadcast(
+        queries.select(
+            F.col("vec_id").alias("query_id"),
+            v.alias("qv"),
+            l2_norm_col(v).alias("_qn"),
         )
     )
-    hcos = lambda a, b, na, nb: F.when(na * nb == 0.0, F.lit(0.0)).otherwise(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    if probes is None:
+        pairs = idx.join(q, F.col("neighbor_id") != F.col("query_id"))
+    else:
+        pairs = (
+            probes.join(idx, "centroid_id")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .join(q, "query_id")
         )
-        / (na * nb)
-    )
-    idx = index.withColumn("_dv", deq).withColumn("_dn", norm(F.col("_dv")))
-    qn = qside.withColumn("_qn", norm(F.col("qv")))
-    coarse = (
-        probes.join(idx, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(qn, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            hcos(
-                F.col("qv"), F.col("_dv"), F.col("_qn"), F.col("_dn")
-            ).alias("sim_q"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_q"), "neighbor_id")
-    candidates = (
-        coarse.withColumn("crk", F.row_number().over(w))
-        .filter(F.col("crk") <= int(k) * int(oversample))
-        .select("query_id", "neighbor_id")
-    )
-    ex = exact.withColumn("_en", norm(F.col("nv_exact")))
-    reranked = (
-        candidates.join(ex, "neighbor_id")
-        .join(qn, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                hcos(
-                    F.col("qv"),
-                    F.col("nv_exact"),
-                    F.col("_qn"),
-                    F.col("_en"),
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        reranked.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= int(k))
-    )
+    sim = _cosine(dot_col("qv", "_dv"), F.col("_qn"), F.col("_dn"))
+    cands = _coarse_window(pairs, sim, int(k) * int(oversample))
+    return _topk_rescore(cands, queries, embeddings, k)
 
 
 def ivf_sq8_topk(
@@ -235,15 +191,8 @@ def ivf_sq8_topk(
     result is exactly brute force (the pinned-correctness regime);
     partial probing trades recall for probe fan-out, bounded in pytest.
     """
-    from .similarity import ivf_index, probe_cells
-
-    # normalize to the (vec_id, embedding) contract ivf_index/probe_cells use
-    embeddings = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
-    )
-    queries = queries.select(
-        F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
-    )
+    embeddings = _keyed(embeddings, col, id_col)
+    queries = _keyed(queries, col, id_col)
     assigned, centroids = ivf_index(embeddings, n_centroids, seed, max_iter)
     lo, hi = sq8_bounds(embeddings, "embedding")
     # the persistable index: (vec_id, centroid_id, codes) — 1 byte/dim
@@ -255,18 +204,8 @@ def ivf_sq8_topk(
     ).join(coded, "neighbor_id")
 
     probes = probe_cells(queries, centroids, n_probe)
-    qside = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-    )
-    exact = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("nv_exact"),
-    )
-    return _coarse_then_rerank(
-        probes, index, qside, exact, lo, hi, k, oversample
+    return _sq8_search(
+        index, queries, embeddings, lo, hi, k, oversample, probes
     )
 
 
@@ -295,11 +234,7 @@ def ivf_sq8_index_build(
     ``ivf_sq8_search`` is the read side, ``ivf_sq8_index_append`` the
     live-corpus maintenance; the pair is equivalent to ``ivf_sq8_topk``
     run live (pinned in tests/test_quantize.py)."""
-    from .similarity import ivf_index
-
-    embeddings = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
-    )
+    embeddings = _keyed(embeddings, col, id_col)
     assigned, centroids = ivf_index(embeddings, n_centroids, seed, max_iter)
     lo, hi = sq8_bounds(embeddings, "embedding")
     coded = sq8_quantize(embeddings, lo, hi, "embedding").select(
@@ -353,16 +288,13 @@ def ivf_sq8_index_append(
     "needs_retrain": bool}. Replay-safe: re-appending the same batch
     upserts by vec_id (same deterministic cell), a no-op in content."""
     from ..sources.sinks import idempotent_merge_parquet
-    from .similarity import probe_cells
 
     base = path.rstrip("/")
     meta = spark.read.parquet(f"{base}/meta").collect()[0]
     centroids = [list(c) for c in meta["centroids"]]
     lo, hi = list(meta["lo"]), list(meta["hi"])
 
-    new_embeddings = new_embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
-    )
+    new_embeddings = _keyed(new_embeddings, col, id_col)
     # nearest existing centroid = a 1-probe cell lookup; deterministic,
     # so a replayed batch lands every vector in the same cell
     assigned = probe_cells(new_embeddings, centroids, n_probe=1).select(
@@ -416,40 +348,22 @@ def ivf_sq8_search(
     ``embeddings`` (the float corpus, touched only for the k x
     oversample survivors per query). Same contract and output schema
     as ``ivf_sq8_topk`` — (query_id, neighbor_id, cosine, rk)."""
-    from .similarity import probe_cells
-
     base = path.rstrip("/")
     index = spark.read.parquet(f"{base}/codes")
     meta = spark.read.parquet(f"{base}/meta").collect()[0]
     centroids = [list(c) for c in meta["centroids"]]
     lo, hi = list(meta["lo"]), list(meta["hi"])
 
-    probes = probe_cells(
-        queries.select(
-            F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
-        ),
-        centroids,
-        n_probe,
-    )
-    qside = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(col).cast("array<double>").alias("qv"),
-        )
-    )
-    exact = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(col).cast("array<double>").alias("nv_exact"),
-    )
-    return _coarse_then_rerank(
-        probes,
+    queries = _keyed(queries, col, id_col)
+    return _sq8_search(
         index.withColumnRenamed("vec_id", "neighbor_id"),
-        qside,
-        exact,
+        queries,
+        _keyed(embeddings, col, id_col),
         lo,
         hi,
         k,
         oversample,
+        probe_cells(queries, centroids, n_probe),
     )
 
 
@@ -470,45 +384,10 @@ def sq8_topk(
     broadcasts, corpus scanned once) — what changes at 100 TB is the
     BYTES: the corpus-wide phase reads the int8 table; only
     |queries| x k x oversample rows ever touch float vectors."""
-    lo, hi = sq8_bounds(embeddings, col)
-    coded = sq8_quantize(embeddings, lo, hi, col)
-    deq = sq8_dequantize_col("codes", lo, hi)
-    corpus_q = coded.select(
-        F.col(id_col).alias("neighbor_id"), deq.alias("nv")
+    embeddings = _keyed(embeddings, col, id_col)
+    queries = _keyed(queries, col, id_col)
+    lo, hi = sq8_bounds(embeddings, "embedding")
+    coded = sq8_quantize(embeddings, lo, hi, "embedding").select(
+        F.col("vec_id").alias("neighbor_id"), "codes"
     )
-    qside = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(col).cast("array<double>").alias("qv"),
-        )
-    )
-    coarse = (
-        corpus_q.join(qside, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _cos(F.col("qv"), F.col("nv")).alias("sim_q"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q"), "neighbor_id"
-    )
-    candidates = (
-        coarse.withColumn("crk", F.row_number().over(w))
-        .filter(F.col("crk") <= int(k) * int(oversample))
-        .select("query_id", "neighbor_id")
-    )
-    exact = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(col).cast("array<double>").alias("nv_exact"),
-    )
-    reranked = (
-        candidates.join(exact, "neighbor_id")
-        .join(qside, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cos(F.col("qv"), F.col("nv_exact")), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        reranked.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= int(k))
-    )
+    return _sq8_search(coded, queries, embeddings, lo, hi, k, oversample)

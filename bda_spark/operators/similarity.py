@@ -289,8 +289,49 @@ def _sampled_prefilter_plan(
     return word_idxs, max_ham
 
 
-def _rescored(candidates: DataFrame, embeddings: DataFrame) -> DataFrame:
-    """Exact cosine for each candidate pair (JVM-side zip_with dot).
+# ------------------------------------------------------------------
+# The shared candidate -> exact-rerank core. Every near-dup and ANN
+# family in this package generates candidates its own way and then
+# goes through these helpers, so the cosine, its zero-norm guard, the
+# GEMM prefilter and the per-query tie-break have one body each.
+
+
+# Per-task cell-size ceiling for the within-cell GEMM candidate scan:
+# an m-member cell's similarity block is scanned in ~128 MB row-blocks,
+# so memory is bounded, but a single task still owns the whole cell —
+# past this size the cell routes to the join-based all-pairs path
+# (reachable only when the caller DISARMS the hot-cell cap with a huge
+# max_cell_size, i.e. the small-scale exact-oracle regimes; armed
+# configs never build a GEMM cell bigger than the cap).
+_GEMM_CELL_CAP = 8192
+# Prefilter slack: numpy's blocked/FMA dot and the JVM's sequential
+# zip_with fold disagree by ~1e-15 relative on a 64-dim unit dot; the
+# margin is 6 orders wider, so the scan cannot drop a pair the exact
+# rescore would keep, while still rejecting ~everything below the
+# threshold.
+_GEMM_MARGIN = 1e-9
+
+
+def _cosine(dot: "F.Column", na: "F.Column", nb: "F.Column") -> "F.Column":
+    """Cosine from a dot product and the two per-row norms, with the
+    zero-norm convention cos(0, x) = 0 (see
+    ``functions.vectors.cosine_similarity_col``: 0/0 would be NaN,
+    which sorts above every real value and passes every threshold)."""
+    den = na * nb
+    return F.when(den == 0.0, F.lit(0.0)).otherwise(dot / den)
+
+
+def _exact_cosine(
+    cands: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    broadcast_left: bool = False,
+) -> DataFrame:
+    """``cands`` plus the exact ``cosine`` between ``left``'s vector for
+    ``id_a`` and ``right``'s vector for ``id_b`` (both frames keyed
+    (vec_id, embedding)) — the one exact-verify step of every family.
 
     Norms are computed ONCE PER ROW on each join input and carried
     through the exchange, so per-PAIR work is one dot + one divide —
@@ -299,28 +340,155 @@ def _rescored(candidates: DataFrame, embeddings: DataFrame) -> DataFrame:
     these HOF aggregates evaluate interpreted, so that's ~5x the
     arithmetic on the candidate-pair hot path). Same expressions in
     the same order, just hoisted — bit-identical results, pinned by
-    the unchanged r6 oracle hashes."""
+    the unchanged r6 oracle hashes. ``broadcast_left`` hints the left
+    side (the small query set of a top-k search)."""
     v = F.col("embedding").cast("array<double>")
-    a = embeddings.select(
-        F.col("vec_id").alias("id_a"),
-        v.alias("va"),
-        l2_norm_col(v).alias("_na"),
+    a = left.select(
+        F.col("vec_id").alias(id_a), v.alias("va"), l2_norm_col(v).alias("_na")
     )
-    b = embeddings.select(
-        F.col("vec_id").alias("id_b"),
-        v.alias("vb"),
-        l2_norm_col(v).alias("_nb"),
+    b = right.select(
+        F.col("vec_id").alias(id_b), v.alias("vb"), l2_norm_col(v).alias("_nb")
     )
-    den = F.col("_na") * F.col("_nb")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_col(F.col("va"), F.col("vb")) / den
-    )
+    if broadcast_left:
+        a = F.broadcast(a)
     return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cosine", cos)
+        cands.join(a, id_a)
+        .join(b, id_b)
+        .withColumn(
+            "cosine", _cosine(dot_col("va", "vb"), F.col("_na"), F.col("_nb"))
+        )
         .drop("va", "vb", "_na", "_nb")
     )
+
+
+def _rank_window(scored: DataFrame, score: str, n: int, rk: str) -> DataFrame:
+    """Rows of ``scored`` ranked per query_id by ``score`` descending
+    (ties to the lower neighbor_id), ranks <= ``n`` kept in ``rk``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), "neighbor_id")
+    return scored.withColumn(rk, F.row_number().over(w)).filter(F.col(rk) <= n)
+
+
+def _coarse_window(scored: DataFrame, sim: "F.Column", keep: int) -> DataFrame:
+    """(query_id, neighbor_id) of each query's ``keep`` best candidates
+    by the approximate score ``sim`` — the compressed-domain stage of
+    the quantized families, whose survivors go to ``_topk_rescore``."""
+    return _rank_window(
+        scored.withColumn("_sim", sim), "_sim", keep, "_crk"
+    ).select("query_id", "neighbor_id")
+
+
+def _topk_rescore(
+    cands: DataFrame, queries: DataFrame, embeddings: DataFrame, k: int
+) -> DataFrame:
+    """Shared tail of every ANN family: exact-cosine rescore of
+    (query_id, neighbor_id) candidates and a deterministic per-query
+    rank window. Query vectors come from the QUERIES frame (broadcast
+    — the query set is small by contract), neighbor vectors from the
+    corpus: an external query whose vec_id is absent from the corpus
+    is first-class, not silently dropped."""
+    scored = _exact_cosine(
+        cands, queries, embeddings, "query_id", "neighbor_id",
+        broadcast_left=True,
+    )
+    return _rank_window(scored, "cosine", k, "rk").select(
+        "query_id", "neighbor_id", "cosine", "rk"
+    )
+
+
+def _vec64(df: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, _e array<double>) — the GEMM scan's input rows."""
+    return df.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").cast("array<double>").alias("_e"),
+    )
+
+
+def _unit_rows(vecs: "pd.Series") -> "np.ndarray":
+    """A column of vectors as float64 rows scaled to unit length.
+    Zero-norm rows stay the zero vector: every score 0, matching the
+    cosine-0 convention (the exact rescore then decides them against
+    the real threshold)."""
+    X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    n = np.linalg.norm(X, axis=1)
+    return np.where(n[:, None] > 0.0, X / np.maximum(n, 1e-300)[:, None], 0.0)
+
+
+def _gemm_scan(
+    Xa: "np.ndarray", Xb: "np.ndarray", thr: float, upper: bool = False
+) -> tuple["np.ndarray", "np.ndarray"]:
+    """Index arrays (i, j) of every row pair with Xa[i] . Xb[j] >= thr,
+    scanned as Xa @ Xb.T in ~128 MB row blocks so memory stays bounded
+    for any cell size. ``upper`` keeps only i < j (a cell scanned
+    against itself)."""
+    out_i, out_j = [], []
+    blk = max(1, (1 << 24) // len(Xb))  # ~128 MB of f64 per block
+    for s in range(0, len(Xa), blk):
+        ii, jj = np.nonzero(Xa[s : s + blk] @ Xb.T >= thr)
+        ii = ii + s
+        if upper:
+            keep = ii < jj
+            ii, jj = ii[keep], jj[keep]
+        out_i.append(ii)
+        out_j.append(jj)
+    return np.concatenate(out_i), np.concatenate(out_j)
+
+
+def _cross_cell_candidates(
+    cl: DataFrame,
+    cr: DataFrame,
+    lid: str,
+    rid: str,
+    threshold: float,
+    el: DataFrame | None = None,
+    er: DataFrame | None = None,
+) -> DataFrame:
+    """(lid, rid) candidate pairs between two cell-assigned frames
+    ``cl`` (_cell, lid) and ``cr`` (_cell, rid): the within-cell CROSS
+    pairs, routed by cell size. Cells where both sides fit
+    ``_GEMM_CELL_CAP`` gather their members in one cogroup task that
+    scans Xl @ Xr.T (``_gemm_scan``) and emits only pairs scoring
+    >= threshold - ``_GEMM_MARGIN``, so the |L_cell| x |R_cell|
+    candidate volume never materializes as rows. Any other cell
+    (reachable only with the caller's cell cap disarmed) keeps the
+    all-cross-pairs equi-join. ``el``/``er`` are (id, _e) frames joined
+    onto the GEMM members; None means that cells frame already carries
+    ``_e``. Every emitted pair must still pay the exact rescore."""
+    sl = cl.groupBy("_cell").agg(F.count("*").alias("_nl"))
+    sr = cr.groupBy("_cell").agg(F.count("*").alias("_nr"))
+    both = sl.join(sr, "_cell")  # cells missing a side emit nothing
+    small = both.filter(
+        (F.col("_nl") <= _GEMM_CELL_CAP) & (F.col("_nr") <= _GEMM_CELL_CAP)
+    ).select("_cell")
+    big = both.filter(
+        (F.col("_nl") > _GEMM_CELL_CAP) | (F.col("_nr") > _GEMM_CELL_CAP)
+    ).select("_cell")
+    thr = float(threshold) - _GEMM_MARGIN
+
+    def members(cells: DataFrame, emb: DataFrame | None, idc: str):
+        m = cells.join(F.broadcast(small), "_cell", "left_semi")
+        return m if emb is None else m.join(emb, idc)
+
+    def _scan(key, lp: "pd.DataFrame", rp: "pd.DataFrame"):
+        if not len(lp) or not len(rp):
+            none = np.array([], dtype=np.int64)
+            return pd.DataFrame({lid: none, rid: none})
+        ii, jj = _gemm_scan(_unit_rows(lp["_e"]), _unit_rows(rp["_e"]), thr)
+        return pd.DataFrame(
+            {lid: lp[lid].to_numpy()[ii], rid: rp[rid].to_numpy()[jj]}
+        )
+
+    gemm = (
+        members(cl, el, lid)
+        .groupBy("_cell")
+        .cogroup(members(cr, er, rid).groupBy("_cell"))
+        .applyInPandas(_scan, f"{lid} long, {rid} long")
+    )
+    fallback = (
+        cl.join(F.broadcast(big), "_cell", "left_semi")
+        .join(cr.join(F.broadcast(big), "_cell", "left_semi"), "_cell")
+        .select(lid, rid)
+    )
+    return gemm.unionByName(fallback)
 
 
 # Size cap for broadcasting the packed-signature word table into the
@@ -518,7 +686,7 @@ def simhash_neardup_pairs(
         if not plan:
             pre = pre.distinct()
     return (
-        _rescored(pre, embeddings)
+        _exact_cosine(pre, embeddings, embeddings)
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -788,9 +956,11 @@ def bounded_training_sample(
         n = n_hint if n_hint is not None else embeddings.count()
         # 1.05x: Bernoulli sampling undershoots the expectation about
         # half the time; the pad keeps the realized sample at/above
-        # the budget with near-certainty
+        # the budget with near-certainty. ``fraction`` must be passed
+        # by keyword: pyspark reads sample(f, seed=s) as an unseeded
+        # call and draws a random seed
         fit_rows = (
-            embeddings.sample(min(1.0, 1.05 * target / n), seed=seed)
+            embeddings.sample(fraction=min(1.0, 1.05 * target / n), seed=seed)
             .select(emb_arr)
             .collect()
         )
@@ -1131,51 +1301,6 @@ def ivf_index(
     return assigned, centroids
 
 
-def _topk_rescore(
-    cands: DataFrame, queries: DataFrame, embeddings: DataFrame, k: int
-) -> DataFrame:
-    """Shared tail of every ANN family: exact-cosine rescore of
-    (query_id, neighbor_id) candidates and a deterministic per-query
-    rank window — one body so the tie-break and the zero-norm
-    convention cannot drift between families. Query vectors come from
-    the QUERIES frame (broadcast — the query set is small by
-    contract, same shape as ``quantize.ivf_sq8_search``), neighbor
-    vectors from the corpus: an external query whose vec_id is absent
-    from the corpus is first-class, not silently dropped."""
-    v = F.col("embedding").cast("array<double>")
-    # norms hoisted to once-per-row, same as _rescored — bit-identical
-    # cosines, one dot + one divide per candidate instead of three
-    # interpreted 64-element aggregates
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            v.alias("va"),
-            l2_norm_col(v).alias("_na"),
-        )
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        v.alias("vb"),
-        l2_norm_col(v).alias("_nb"),
-    )
-    den = F.col("_na") * F.col("_nb")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_col(F.col("va"), F.col("vb")) / den
-    )
-    scored = (
-        cands.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("cosine", cos)
-        .drop("va", "vb", "_na", "_nb")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
-
-
 def _nested_centroid_lit(centroids: list[list[float]]) -> "F.Column":
     """k x dim centroid list as a plan-literal array<array<double>>.
 
@@ -1369,22 +1494,6 @@ def simhash_topk(
     return _topk_rescore(cands, queries, embeddings, k)
 
 
-# Per-task cell-size ceiling for the within-cell GEMM candidate scan:
-# an m-member cell's similarity block is scanned in ~128 MB row-blocks,
-# so memory is bounded, but a single task still owns the whole cell —
-# past this size the cell routes to the join-based all-pairs path
-# (reachable only when the caller DISARMS the hot-cell cap with a huge
-# max_cell_size, i.e. the small-scale exact-oracle regimes; armed
-# configs never build a GEMM cell bigger than the cap).
-_GEMM_CELL_CAP = 8192
-# Prefilter slack: numpy's blocked/FMA dot and the JVM's sequential
-# zip_with fold disagree by ~1e-15 relative on a 64-dim unit dot; the
-# margin is 6 orders wider, so the scan cannot drop a pair the exact
-# rescore would keep, while still rejecting ~everything below the
-# threshold.
-_GEMM_MARGIN = 1e-9
-
-
 def _cell_candidates_gemm(
     cells: DataFrame,
     embeddings: DataFrame,
@@ -1404,7 +1513,7 @@ def _cell_candidates_gemm(
     >= threshold - _GEMM_MARGIN leave the task — the quadratic term
     still exists but costs a BLAS flop per pair, not a shuffled row,
     and the surviving ~true pairs alone pay the exact rescore
-    (``_rescored``) so emitted cosines stay bit-identical to the
+    (``_exact_cosine``) so emitted cosines stay bit-identical to the
     join path and the DuckDB oracle.
 
     Cell routing (single assignment: each doc_id sits in exactly ONE
@@ -1419,59 +1528,24 @@ def _cell_candidates_gemm(
       - in between (only reachable with the cap disarmed past
         _GEMM_CELL_CAP, i.e. the exact-oracle regimes at small
         scale): the original all-pairs equi-join."""
-    import pandas as pd
-
     from .dedup import _rank_gap_chain_pairs
 
     cap = int(max_cell_size)
     gemm_cap = min(cap, _GEMM_CELL_CAP)
     sizes = cells.groupBy("band_key").agg(F.count("*").alias("_bsz"))
     small = sizes.filter(F.col("_bsz") <= gemm_cap).select("band_key")
-    emb64 = embeddings.select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").cast("array<double>").alias("_e"),
-    )
     members = cells.join(F.broadcast(small), "band_key", "left_semi").join(
-        emb64, "doc_id"
+        _vec64(embeddings, "doc_id"), "doc_id"
     )
     thr = float(threshold) - _GEMM_MARGIN
 
     def _scan(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame(
-            {
-                "id_a": np.array([], dtype=np.int64),
-                "id_b": np.array([], dtype=np.int64),
-            }
-        )
-        m = len(pdf)
-        if m < 2:
-            return empty
+        # sorted ids + the upper triangle give id_a < id_b
         pdf = pdf.sort_values("doc_id", kind="stable")
         ids = pdf["doc_id"].to_numpy()
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_e"]])
-        nrm = np.linalg.norm(X, axis=1)
-        # zero-norm rows normalize to the zero vector: every score 0,
-        # matching the engine-wide cosine-0 convention (the exact
-        # rescore then decides them against the real threshold)
-        Xn = np.where(
-            nrm[:, None] > 0.0, X / np.maximum(nrm, 1e-300)[:, None], 0.0
-        )
-        out_a, out_b = [], []
-        blk = max(1, (1 << 24) // m)  # ~128 MB of f64 per S block
-        for s in range(0, m, blk):
-            S = Xn[s : s + blk] @ Xn.T
-            ii, jj = np.nonzero(S >= thr)
-            keep = (ii + s) < jj  # upper triangle: id_a < id_b
-            out_a.append(ids[ii[keep] + s])
-            out_b.append(ids[jj[keep]])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-            }
-        )
+        X = _unit_rows(pdf["_e"])
+        ii, jj = _gemm_scan(X, X, thr, upper=True)
+        return pd.DataFrame({"id_a": ids[ii], "id_b": ids[jj]})
 
     out = members.groupBy("band_key").applyInPandas(
         _scan, "id_a long, id_b long"
@@ -1592,7 +1666,7 @@ def semantic_neardup_pairs(
     cands = _cell_candidates_gemm(
         cells, embeddings, float(threshold), max_cell_size
     )
-    return _rescored(cands, embeddings).filter(
+    return _exact_cosine(cands, embeddings, embeddings).filter(
         F.col("cosine") >= float(threshold)
     )
 
@@ -1875,108 +1949,31 @@ def semantic_match_new(
     corpus = spark.read.parquet(f"{base}/cells").filter(
         F.col("centroid_id").isin(touched)
     )
-    # r13: the probe-vs-cell verify runs through the same cogroup GEMM
-    # prefilter as semantic_fuzzy_join — the |batch| x cell_size
+    # The probe-vs-cell verify runs through the shared cogroup GEMM
+    # prefilter (``_cross_cell_candidates``) — the |batch| x cell_size
     # candidate volume per probed cell is scanned as one local
     # Xq @ Xc^T per cell and only pairs above threshold-minus-margin
     # leave the task; the survivors alone pay the exact-cosine join
-    # (emitted values bit-identical to the pure-join plan). Cells
-    # bigger than the per-task cap keep the original equi-join shape.
-    # A corpus vector lives in exactly one cell, so multi-probe still
-    # never duplicates a pair.
-    import pandas as pd
-
-    v = F.col("embedding").cast("array<double>")
-    q64 = probes.join(
-        new_embeddings.select(
-            F.col("vec_id").alias("query_id"), v.alias("_e")
+    # (emitted values bit-identical to the pure-join plan). A corpus
+    # vector lives in exactly one cell, so multi-probe still never
+    # duplicates a pair.
+    cands = _cross_cell_candidates(
+        probes.select(
+            F.col("centroid_id").alias("_cell"),
+            F.col("query_id").alias("new_id"),
         ),
-        "query_id",
-    ).select("centroid_id", "query_id", "_e")
-    c64 = corpus.select(
-        "centroid_id", F.col("vec_id").alias("corpus_id"), v.alias("_e")
-    )
-    csz = c64.groupBy("centroid_id").agg(F.count("*").alias("_n"))
-    small = csz.filter(F.col("_n") <= _GEMM_CELL_CAP).select("centroid_id")
-    big = csz.filter(F.col("_n") > _GEMM_CELL_CAP).select("centroid_id")
-    thr = float(threshold) - _GEMM_MARGIN
-
-    def _scan(key, qp: "pd.DataFrame", cp: "pd.DataFrame"):
-        empty = pd.DataFrame(
-            {
-                "new_id": np.array([], dtype=np.int64),
-                "corpus_id": np.array([], dtype=np.int64),
-            }
-        )
-        if not len(qp) or not len(cp):
-            return empty
-        qids = qp["query_id"].to_numpy()
-        cids = cp["corpus_id"].to_numpy()
-
-        def _norm(pdf):
-            X = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["_e"]]
-            )
-            n = np.linalg.norm(X, axis=1)
-            return np.where(
-                n[:, None] > 0.0, X / np.maximum(n, 1e-300)[:, None], 0.0
-            )
-
-        Xq, Xc = _norm(qp), _norm(cp)
-        out_q, out_c = [], []
-        blk = max(1, (1 << 24) // len(cids))
-        for s in range(0, len(qids), blk):
-            S = Xq[s : s + blk] @ Xc.T
-            ii, jj = np.nonzero(S >= thr)
-            out_q.append(qids[ii + s])
-            out_c.append(cids[jj])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "new_id": np.concatenate(out_q),
-                "corpus_id": np.concatenate(out_c),
-            }
-        )
-
-    gemm = (
-        q64.join(F.broadcast(small), "centroid_id", "left_semi")
-        .groupBy("centroid_id")
-        .cogroup(
-            c64.join(F.broadcast(small), "centroid_id", "left_semi")
-            .groupBy("centroid_id")
-        )
-        .applyInPandas(_scan, "new_id long, corpus_id long")
-    )
-    fallback = (
-        q64.join(F.broadcast(big), "centroid_id", "left_semi")
-        .select("centroid_id", F.col("query_id").alias("new_id"))
-        .join(
-            c64.join(F.broadcast(big), "centroid_id", "left_semi")
-            .select("centroid_id", "corpus_id"),
-            "centroid_id",
-        )
-        .select("new_id", "corpus_id")
-    )
-    cands = gemm.unionByName(fallback)
-    a = new_embeddings.select(
-        F.col("vec_id").alias("new_id"),
-        v.alias("va"),
-        l2_norm_col(v).alias("_na"),
-    )
-    b = corpus.select(
-        F.col("vec_id").alias("corpus_id"),
-        v.alias("vb"),
-        l2_norm_col(v).alias("_nb"),
-    )
-    den = F.col("_na") * F.col("_nb")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_col(F.col("va"), F.col("vb")) / den
+        corpus.select(
+            F.col("centroid_id").alias("_cell"),
+            F.col("vec_id").alias("corpus_id"),
+            F.col("embedding").cast("array<double>").alias("_e"),
+        ),
+        "new_id",
+        "corpus_id",
+        threshold,
+        el=_vec64(new_embeddings, "new_id"),
     )
     return (
-        cands.join(a, "new_id")
-        .join(b, "corpus_id")
-        .withColumn("cosine", cos)
+        _exact_cosine(cands, new_embeddings, corpus, "new_id", "corpus_id")
         .filter(F.col("cosine") >= float(threshold))
         .select("new_id", "corpus_id", "cosine")
     )
@@ -2123,106 +2120,16 @@ def semantic_fuzzy_join(
         return cells.localCheckpoint(eager=True)
 
     cl, cr = _cells(left, "left_id"), _cells(right, "right_id")
-    # r13: within-cell CROSS pairs via one local GEMM per cell (the
-    # cross-side analog of _cell_candidates_gemm, same margin/blocking
-    # discipline): for cells where BOTH sides fit the per-task cap,
-    # a cogroup task scans Xl_n @ Xr_n.T and emits only pairs scoring
-    # >= threshold - margin, so the |L_cell| x |R_cell| candidate
-    # volume never materializes as rows; only the survivors pay the
-    # exact-cosine join below (emitted values bit-identical to the
-    # pure-join plan and the DuckDB oracle). Cells where either side
-    # exceeds _GEMM_CELL_CAP (reachable only with the cap disarmed —
-    # the small-scale exact-oracle regimes) keep the original
-    # cell-equi-join shape.
-    import pandas as pd
-
-    sl = cl.groupBy("_cell").agg(F.count("*").alias("_nl"))
-    sr = cr.groupBy("_cell").agg(F.count("*").alias("_nr"))
-    both = sl.join(sr, "_cell")  # cells missing a side emit nothing
-    small = both.filter(
-        (F.col("_nl") <= _GEMM_CELL_CAP) & (F.col("_nr") <= _GEMM_CELL_CAP)
-    ).select("_cell")
-    big = both.filter(
-        (F.col("_nl") > _GEMM_CELL_CAP) | (F.col("_nr") > _GEMM_CELL_CAP)
-    ).select("_cell")
-    e64 = lambda df, idc: df.select(  # noqa: E731
-        F.col("vec_id").alias(idc),
-        F.col("embedding").cast("array<double>").alias("_e"),
-    )
-    ml = cl.join(F.broadcast(small), "_cell", "left_semi").join(
-        e64(left, "left_id"), "left_id"
-    )
-    mr = cr.join(F.broadcast(small), "_cell", "left_semi").join(
-        e64(right, "right_id"), "right_id"
-    )
-    thr = float(threshold) - _GEMM_MARGIN
-
-    def _scan(key, lp: "pd.DataFrame", rp: "pd.DataFrame"):
-        empty = pd.DataFrame(
-            {
-                "left_id": np.array([], dtype=np.int64),
-                "right_id": np.array([], dtype=np.int64),
-            }
-        )
-        if not len(lp) or not len(rp):
-            return empty
-        lids = lp["left_id"].to_numpy()
-        rids = rp["right_id"].to_numpy()
-
-        def _norm(pdf):
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_e"]]
-            )
-            n = np.linalg.norm(X, axis=1)
-            return np.where(
-                n[:, None] > 0.0, X / np.maximum(n, 1e-300)[:, None], 0.0
-            )
-
-        Xl, Xr = _norm(lp), _norm(rp)
-        out_l, out_r = [], []
-        blk = max(1, (1 << 24) // len(rids))
-        for s in range(0, len(lids), blk):
-            S = Xl[s : s + blk] @ Xr.T
-            ii, jj = np.nonzero(S >= thr)
-            out_l.append(lids[ii + s])
-            out_r.append(rids[jj])
-        if not out_l:
-            return empty
-        return pd.DataFrame(
-            {
-                "left_id": np.concatenate(out_l),
-                "right_id": np.concatenate(out_r),
-            }
-        )
-
-    gemm = (
-        ml.groupBy("_cell")
-        .cogroup(mr.groupBy("_cell"))
-        .applyInPandas(_scan, "left_id long, right_id long")
-    )
-    fallback = (
-        cl.join(F.broadcast(big), "_cell", "left_semi")
-        .join(cr.join(F.broadcast(big), "_cell", "left_semi"), "_cell")
-        .select("left_id", "right_id")
-    )
-    cands = gemm.unionByName(fallback)
-    v = F.col("embedding").cast("array<double>")
-    a = left.select(
-        F.col("vec_id").alias("left_id"), v.alias("va"),
-        l2_norm_col(v).alias("_na"),
-    )
-    b = right.select(
-        F.col("vec_id").alias("right_id"), v.alias("vb"),
-        l2_norm_col(v).alias("_nb"),
-    )
-    den = F.col("_na") * F.col("_nb")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_col(F.col("va"), F.col("vb")) / den
+    # Within-cell CROSS pairs via one local GEMM per cell
+    # (``_cross_cell_candidates``); only the survivors pay the exact-
+    # cosine join below (emitted values bit-identical to the pure-join
+    # plan and the DuckDB oracle)
+    cands = _cross_cell_candidates(
+        cl, cr, "left_id", "right_id", threshold,
+        el=_vec64(left, "left_id"), er=_vec64(right, "right_id"),
     )
     return (
-        cands.join(a, "left_id")
-        .join(b, "right_id")
-        .withColumn("cosine", cos)
+        _exact_cosine(cands, left, right, "left_id", "right_id")
         .filter(F.col("cosine") >= float(threshold))
         .select("left_id", "right_id", "cosine")
     )

@@ -42,8 +42,11 @@ def pricing_summary(spark, sf_dir):
     costs ~0.15 s/MB per core, so an underparallelized scan is spread
     first (functions.spread, cost-gated): only the six aggregated
     columns cross the exchange, and the partial aggregation above it
-    collapses each task to a handful of rows. Decimal addition is
-    exact, so the result is identical under any row placement."""
+    collapses each task to a handful of rows. Only the four xsum
+    columns are exact under any row placement (decimal addition is
+    exact). The three avg columns are double sums, whose last bits
+    depend on summation order; they match across placements only
+    through the round(·, 6), which can tip at an exact rounding tie."""
     li = t(spark, sf_dir, "lineitem")
     return (
         spread_scan(

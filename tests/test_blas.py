@@ -39,13 +39,19 @@ def test_default_cap_is_one(monkeypatch):
 
 
 def test_preexported_pool_env_wins_over_default(monkeypatch):
-    """r17 (ADVICE r16): a deployment that exported
-    OPENBLAS_NUM_THREADS/OMP_NUM_THREADS gets that cap from the ctypes
-    runtime setter too, instead of being clobbered down to 1;
+    """A deployment that exported any of the standard pool variables
+    gets that cap from the ctypes runtime setter too, instead of being
+    clobbered down to 1 (earlier entries of ``_BLAS_ENV`` win);
     BDA_BLAS_THREADS still overrides everything."""
     monkeypatch.delenv("BDA_BLAS_THREADS", raising=False)
     for k in blas._BLAS_ENV:
         monkeypatch.delenv(k, raising=False)
+    monkeypatch.setenv("VECLIB_MAXIMUM_THREADS", "9")
+    assert blas.blas_thread_cap() == 9
+    monkeypatch.setenv("NUMEXPR_NUM_THREADS", "8")
+    assert blas.blas_thread_cap() == 8
+    monkeypatch.setenv("MKL_NUM_THREADS", "7")
+    assert blas.blas_thread_cap() == 7
     monkeypatch.setenv("OMP_NUM_THREADS", "6")
     assert blas.blas_thread_cap() == 6
     monkeypatch.setenv("OPENBLAS_NUM_THREADS", "3")

@@ -3,6 +3,7 @@ bound, code range, and end-to-end top-k recall vs the exact baseline."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bda_spark.operators.quantize import (
@@ -332,7 +333,82 @@ def test_ivf_index_stale_small_hint_never_full_collects(spark):
         emb, n_centroids=4, train_per_centroid=2, n_hint=5
     )
     assert len(centroids) == 4
+    # the Bernoulli fallback is seeded: a second build trains on the
+    # same sample and returns the same centroids
+    _, again = ivf_index(emb, n_centroids=4, train_per_centroid=2, n_hint=5)
+    assert again == centroids
     # every corpus vector got assigned — the lying hint didn't shrink
     # the index to the capped sample
     assert assigned.count() == n
     assert assigned.select("centroid_id").distinct().count() >= 2
+
+
+_EXACT_K = 5
+
+
+@pytest.fixture(scope="module")
+def exact_regime(spark):
+    """Corpus, queries (four corpus rows + one external vector) and the
+    reference rows: ``ivf_topk`` probing every cell, which is brute
+    force."""
+    from bda_spark.operators.similarity import ivf_topk
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    ext = emb.filter(F.col("vec_id") == 7).select(
+        F.lit(1_000_000).cast("long").alias("vec_id"), "embedding"
+    )
+    queries = (
+        emb.filter(F.col("vec_id") < 4).select("vec_id", "embedding").unionByName(ext)
+    )
+    ref = ivf_topk(
+        emb, queries, k=_EXACT_K, n_centroids=8, n_probe=8,
+        train_per_centroid=32,
+    )
+    return emb, queries, _ann_rows(ref)
+
+
+def _ann_rows(df):
+    return sorted(
+        (r["query_id"], r["neighbor_id"], r["rk"], r["cosine"])
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "family", ["ivf_sq8_topk", "ivf_sq8_search", "sq8_topk", "pq_adc_topk"]
+)
+def test_exact_regime_families_match_ivf_topk(spark, tmp_path, exact_regime, family):
+    """Differential test over the shared exact-rerank core: in the
+    exact regime (every cell probed, oversample >= corpus/k so the
+    coarse stage keeps every row) each quantized family must return
+    the SAME (query_id, neighbor_id, rk, cosine) rows as full-probe
+    ``ivf_topk`` — bit-equal cosines and identical tie-breaks, not
+    merely the same neighbor sets."""
+    from bda_spark.operators.pq import pq_adc_topk
+    from bda_spark.operators.quantize import (
+        ivf_sq8_index_build,
+        ivf_sq8_search,
+        ivf_sq8_topk,
+    )
+
+    emb, queries, want = exact_regime
+    k = _EXACT_K
+    oversample = -(-emb.count() // k)  # ceil(corpus / k)
+    if family == "ivf_sq8_topk":
+        got = ivf_sq8_topk(
+            emb, queries, k=k, n_centroids=8, n_probe=8, oversample=oversample
+        )
+    elif family == "ivf_sq8_search":
+        path = str(tmp_path / "ivf_sq8")
+        ivf_sq8_index_build(emb, path, n_centroids=8)
+        got = ivf_sq8_search(
+            spark, path, queries, emb, k=k, n_probe=8, oversample=oversample
+        )
+    elif family == "sq8_topk":
+        got = sq8_topk(emb, queries, k=k, oversample=oversample)
+    else:
+        got = pq_adc_topk(
+            emb, queries, k=k, m=8, n_codewords=16, oversample=oversample,
+            max_iter=2,
+        )
+    assert _ann_rows(got) == want

@@ -876,14 +876,14 @@ def test_gemm_cell_scan_matches_join_path_across_all_branches(
 ):
     """r13 within-cell GEMM prefilter (`_cell_candidates_gemm`): the
     pair set AND cosines must be bit-identical to the old
-    _banded_candidates + _rescored join path across all three cell
+    _banded_candidates + _exact_cosine join path across all three cell
     routes — GEMM (size <= gemm cap), mid (> gemm cap but <= the
     disarmed max_cell_size: the all-pairs join branch; forced here by
     shrinking _GEMM_CELL_CAP), and hot (> max_cell_size: rank-gap
     chain edges)."""
     from bda_spark.operators import similarity as sim
     from bda_spark.operators.dedup import _banded_candidates
-    from bda_spark.operators.similarity import _rescored
+    from bda_spark.operators.similarity import _exact_cosine
 
     rng = np.random.default_rng(31)
     rows = []
@@ -922,7 +922,7 @@ def test_gemm_cell_scan_matches_join_path_across_all_branches(
         ref_c = _banded_candidates(cells, max_cell_size).select(
             F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
         )
-        ref = _rescored(ref_c, emb).filter(F.col("cosine") >= 0.9)
+        ref = _exact_cosine(ref_c, emb, emb).filter(F.col("cosine") >= 0.9)
         assert pairs.exceptAll(ref).count() == 0
         assert ref.exceptAll(pairs).count() == 0
         return pairs.count()

@@ -50,6 +50,25 @@ def test_already_parallel_input_is_untouched(spark):
     assert spread_scan(df, 64 * 1024) is df
 
 
+def test_input_without_stats_is_untouched(spark):
+    """A plan Catalyst has no statistics for (an RDD-backed frame)
+    reports the Long.MaxValue placeholder; the gate must read that as
+    "size unknown" and add no exchange, not as a huge input."""
+    from bda_spark.functions.spread import _plan_size_bytes
+
+    df = spark.sparkContext.parallelize(
+        [(i,) for i in range(1000)], 1
+    ).toDF("x long")
+    raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(str(raw)) == 2**63 - 1  # the no-stats placeholder
+    assert _plan_size_bytes(df) is None
+    out = spread_scan(df, 64 * 1024)
+    assert out is df
+    assert "RoundRobinPartitioning" not in (
+        out._jdf.queryExecution().executedPlan().toString()
+    )
+
+
 def test_shingles_identical_with_and_without_spread(spark, monkeypatch):
     import bda_spark.operators.dedup as dedup
 

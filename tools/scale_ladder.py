@@ -571,8 +571,9 @@ PER_QUERY_2D_NOTE = {
         "cap 256 armed; the registry query's n_centroids=1 regime is "
         "the quadratic oracle anchor): union-trained cells, per-side "
         "assignment, then (r13) within-cell CROSS pairs via one "
-        "cogroup GEMM per cell — the cross-side analog of "
-        "_cell_candidates_gemm; only pairs above threshold-minus-"
+        "cogroup GEMM per cell (_cross_cell_candidates, the "
+        "cross-side twin of _cell_candidates_gemm over the shared "
+        "_gemm_scan kernel); only pairs above threshold-minus-"
         "margin leave the task and pay the exact-cosine verify "
         "(t100x 11.3 -> 10.2 s, exponent 0.470 -> 0.379 vs the "
         "cell-equi-join candidate shape it replaced). The fixture's "
